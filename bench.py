@@ -67,6 +67,9 @@ def make_job_frontier(tracker, start: int = 0):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
+    from cdc_debezium_kafka_airflow_spark.operators.similarity import (
+        clear_model_memos,
+    )
     from cdc_debezium_kafka_airflow_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -132,14 +135,7 @@ def main() -> None:
         # drop in-process trained-model memos so every timed run pays its
         # own training (round 13 — no cross-query model amortization)
         spark.catalog.clearCache()
-        try:
-            from cdc_debezium_kafka_airflow_spark.operators.similarity import (
-                clear_model_memos,
-            )
-
-            clear_model_memos()
-        except Exception:
-            pass
+        clear_model_memos()
         return elapsed
 
     timings: dict[str, float] = {}

@@ -90,6 +90,21 @@ RUNTIME_CONFS: dict[str, str] = {
     # On a 1000-executor cluster reading 100 TB this is set to O(cores*3)
     # or left high and AQE-coalesced.
     "spark.sql.shuffle.partitions": "32",
+    # Streaming checkpoint I/O (offset/commit logs, file-source log, state
+    # store deltas). Without the native Hadoop library the local file
+    # system shells out for permission and link checks, and the default
+    # FileContext manager forks `chmod` per temp and .crc file and
+    # `readlink` per rename: ~390 forks per 8-partition micro-batch, most
+    # of the state commit time. The FileSystem manager needs ~85. Its
+    # rename is still atomic on local POSIX and HDFS, so the exactly-once
+    # offset/commit protocol holds; it checks `exists` before renaming
+    # instead of renaming without overwrite, a gap only two writers on one
+    # checkpoint could hit, and Spark refuses two active runs of one
+    # checkpoint.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

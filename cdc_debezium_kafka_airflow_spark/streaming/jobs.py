@@ -48,9 +48,13 @@ def temp_checkpoint_dir() -> str:
     state store still writes every delta/offset/commit file to the checkpoint
     — on a shared box that disk I/O is the main wall-clock variance (measured
     3.9-8.3s for the same stream-stream join on /tmp vs a stable 3.1-4.5s on
-    /dev/shm). The cluster analog: point `spark.sql.streaming.checkpointLocation`
-    worker state at fast local SSD, keep only the *resumable* production
-    checkpoints on durable storage. Callers must remove the dir when done."""
+    /dev/shm). Most of the per-batch checkpoint cost was not I/O but forks:
+    the default checkpoint file manager forked `chmod`/`readlink` per file
+    without the native Hadoop library, which `session.RUNTIME_CONFS` avoids
+    by selecting the FileSystem-based manager. The cluster analog: point
+    `spark.sql.streaming.checkpointLocation` worker state at fast local SSD,
+    keep only the *resumable* production checkpoints on durable storage.
+    Callers must remove the dir when done."""
     import tempfile
 
     base = "/dev/shm/spark_graft_ck"

@@ -135,6 +135,41 @@ def test_python_datasource_changelog_matches_native(spark, sf_dir):
     assert all(p.end > p.start for p in parts)
 
 
+def test_python_datasource_null_ts_raises_value_error(tmp_path):
+    """A changelog fixture row with a NULL ts cannot be rendered into the
+    envelope template; the emitter must refuse it with a real exception
+    (a bare assert vanishes under ``python -O``)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from cdc_debezium_kafka_airflow_spark.sources.pydatasource import (
+        ChangelogPartition,
+        _emit_changelog_batch,
+    )
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(
+                    [dt.datetime(2024, 1, 1), None], pa.timestamp("us")
+                ),
+                "user_id": pa.array([10, 20], pa.int64()),
+                "event_type": pa.array(["view", "view"]),
+                "value": pa.array([1.0, 2.0]),
+                "props": pa.array(["{}", "{}"]),
+            }
+        ),
+        path,
+    )
+    with pytest.raises(ValueError, match="null ts in changelog fixture"):
+        next(_emit_changelog_batch(path, ChangelogPartition(0, 0, 2)))
+
+
 def test_schema_evolve_widens_with_nulls(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     v1 = o.limit(10).select("o_orderkey")

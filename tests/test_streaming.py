@@ -212,6 +212,33 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def test_checkpoint_io_uses_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoint files go through the FileSystem-based manager:
+    without the native Hadoop library the default FileContext manager
+    forks `chmod`/`readlink` per checkpoint file, which dominated the
+    per-batch state commit. Every session apply_runtime_confs touches must
+    carry the setting."""
+    from cdc_debezium_kafka_airflow_spark.session import apply_runtime_confs
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    cls = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == cls
+
+    fresh = spark.newSession()
+    fresh.conf.unset(key)
+    apply_runtime_confs(fresh)
+    assert fresh.conf.get(key) == cls
+
+
 def test_foreachbatch_upsert_with_mid_stream_schema_evolution(spark, sf_dir):
     """Schema evolution INSIDE a stream: later micro-batches carry an extra
     column; the foreachBatch merge widens earlier state with NULLs
